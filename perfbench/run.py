@@ -34,7 +34,7 @@ import gen  # noqa: E402
 
 WORKLOADS = ("etl_excel", "etl_direct", "query_mix")
 # generated catalog sizes; see NOTES.md for how they were chosen
-ETL_SIZES = {"etl_excel": 12, "etl_direct": 10}
+ETL_SIZES = {"etl_excel": 36, "etl_direct": 24}
 JVM_TIMEOUT_S = 170
 LAUNCH = os.path.join(HERE, "target", "launch")
 

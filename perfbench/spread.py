@@ -15,6 +15,7 @@ import os
 import statistics
 import subprocess
 import sys
+import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -34,20 +35,26 @@ def main():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
     values = {}
+    walls = []
     for seed in seeds(a.seeds):
+        t0 = time.monotonic()
         r = subprocess.run(
             [sys.executable, os.path.join(HERE, "run.py"), "--workload",
              a.workload, "--seed", str(seed), "--seconds",
              str(spec["run_seconds"]), "--trace", a.trace],
             cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
             text=True)
+        walls.append(time.monotonic() - t0)
         result = json.loads(r.stdout.strip().splitlines()[-1])
         print(f"seed {seed}: correct={result['correct']} "
-              f"failed={result['failed']}/{result['attempted']} " +
+              f"failed={result['failed']}/{result['attempted']} "
+              f"wall={walls[-1]:.1f}s " +
               " ".join(f"{k}={v['value']:.4g}"
                        for k, v in result["metrics"].items()), flush=True)
         for k, v in result["metrics"].items():
             values.setdefault(k, []).append(v["value"])
+    print(f"{a.workload:11s} process wall: median {statistics.median(walls):.1f}"
+          f" s, total {sum(walls):.0f} s")
     bounds = {m["name"]: m.get("bound") for m in spec["end_to_end"]}
     for k, vs in values.items():
         med = statistics.median(vs)

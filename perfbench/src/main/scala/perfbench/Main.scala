@@ -34,7 +34,7 @@ object Main {
   }
 
   /** A pass (one ETL lifecycle, one pass over the query mix) takes
-    * 10-20 s on a 4-core host; a run times round(--seconds / PassSeconds)
+    * 10-35 s on a 4-core host; a run times round(--seconds / PassSeconds)
     * passes, at least one, so the amount of work never depends on how
     * fast it goes. */
   val PassSeconds = 15.0
