@@ -23,6 +23,8 @@ import scala.util.Try
   */
 object Etl {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   final case class Args(configDir: String = "config",
       indexPath: Option[String] = None, outputDir: String = "output",
       replace: Boolean = true, interactive: Boolean = false,
@@ -120,7 +122,7 @@ object Etl {
         catalogId -> result
       }.fold(e => {
         // catalog-level fault isolation (reference logs + continues)
-        System.err.println(s"[etl] catalog $catalogId failed: $e")
+        log.warn(s"catalog $catalogId failed", e)
         None
       }, Some(_))
     }
@@ -150,7 +152,6 @@ object Etl {
       Try(EmailSink.sendStageReport(transportFor(mailer), mailer,
         recipients, subject, s"Reporte de scraping: $catalogId",
         attachments))
-        .failed.foreach(e =>
-          System.err.println(s"[etl] mail for $catalogId failed: $e"))
+        .failed.foreach(e => log.warn(s"mail for $catalogId failed", e))
     }
 }

@@ -1,15 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.GF
 import graft.model.Frequency
 import graft.operators.{CatalogValidator, Reports, TimeSeriesOps}
 import graft.sinks.{ReportXlsx, SingleFileCsv}
 import graft.sources.{CatalogReader, CatalogXlsx, CellGrid, Ingest}
 
-import scala.util.{Failure, Success, Try}
+import scala.util.Try
 
 /** The reference's ETL lifecycle re-expressed Spark-first (SURVEY §3):
   *
@@ -18,23 +16,32 @@ import scala.util.{Failure, Success, Try}
   *   → BATCHED scrape of every excel distribution (S7 via
   *     CellGrid.scrapeAll: all workbooks in one grid, two broadcast
   *     joins) + per-item CSV/TXT reads (S5/S6)
-  *   → validation battery (§2.9: per-serie summary, frequency
-  *     conformance, header drift — each ONE job for the whole catalog)
+  *   → ONE validation battery for both paths
+  *     (TimeSeriesOps.distributionVerdicts over the long form: period
+  *     counts, null/duplicate times, missing ratios, frequency gaps on
+  *     each distribution's time index) plus the excel grid checks
+  *     (header drift, T2 trim) — each a fixed number of jobs for the
+  *     whole catalog
   *   → ordered single-file CSV sink (K1)
   *   → status reports + indicators (A1-A3, O1)
   *
-  * Fault isolation (§2.10): spec assembly and the final write of each
-  * distribution are wrapped in Try; a failure becomes an ERROR report
+  * Fault isolation (§2.10): spec assembly, each file read and each
+  * final write are wrapped in Try; a failure becomes an ERROR report
   * row with the exception repr, never a job abort — the reference's
-  * try/except per distribution, kept as data.
+  * try/except per distribution, kept as data. A batch that throws is
+  * rerun per workbook (excel) or per file (direct); a group that still
+  * throws becomes ERROR rows for its distributions.
   *
   * Scale shape: the driver loop of the reference (one python iteration
   * per distribution, reference base.py:155-207) becomes O(1) Spark jobs
-  * for scrape + validation regardless of distribution count, plus one
-  * (tiny, checkpoint-backed) write job per output file — the only
-  * per-distribution cost left is the K1 exact-filename sink itself.
+  * for scrape + validation on both paths regardless of distribution
+  * count, plus one write job per output file — the only
+  * per-distribution cost left is the K1 exact-filename sink itself (and,
+  * on the direct path, the read of each file's header).
   */
 object Pipeline {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   final case class DistributionResult(
       catalogId: String, datasetId: String, distributionId: String,
@@ -149,6 +156,11 @@ object Pipeline {
       sheet: String, freq: Frequency, timeDataStartCell: String,
       series: Seq[CellGrid.SeriesSpec], headerCells: Seq[(String, String)])
 
+  /** One direct CSV/TXT distribution with its wide frame and declared
+    * frequency. */
+  private final case class DirectPrep(m: ManifestEntry, wide: DataFrame,
+      freq: Option[Frequency])
+
   private val CellRef = "^[A-Za-z]+[0-9]+$".r
 
   private def requireCell(disId: String, what: String, cell: String): String =
@@ -218,6 +230,10 @@ object Pipeline {
     val (excelItems, directItems) =
       active.partition(_.method.contains("excel_file"))
 
+    def errorRow(m: ManifestEntry, e: Throwable): DistributionResult =
+      DistributionResult(m.catalogId, m.datasetId, m.distributionId,
+        "ERROR", e.toString.take(500), outPathOf(m), 0L)
+
     // ---- spec assembly per excel distribution; failures isolate here
     val preps: Seq[Either[DistributionResult, ExcelPrep]] =
       excelItems.map { m =>
@@ -246,55 +262,10 @@ object Pipeline {
             requireCell(m.distributionId, "timeDataStart",
               timeField.dataStartCell.getOrElse("")),
             series, headers)
-        }.toEither.left.map(e =>
-          DistributionResult(m.catalogId, m.datasetId, m.distributionId,
-            "ERROR", e.toString.take(500), outPathOf(m), 0L))
+        }.toEither.left.map(errorRow(m, _))
       }
     val prepErrors = preps.collect { case Left(r) => r }
     val okPreps = preps.collect { case Right(p) => p }
-
-    // per-distribution scrape — the FALLBACK path when the batch core
-    // fails at execution time (one unreadable workbook must degrade to
-    // that workbook's ERROR rows, never abort the catalog — the
-    // reference's per-distribution try/except, base.py:155-207)
-    def scrapeOneFallback(p: ExcelPrep): DistributionResult = {
-      val d = p.m.distributionId
-      val outPath = outPathOf(p.m)
-      Try {
-        val grid = allGrids(p.url)
-        val long = CellGrid.scrapeDistribution(grid, p.sheet,
-          p.timeDataStartCell, p.timeDataStartCell, p.freq, p.series)
-        val wide = TimeSeriesOps.alignWide(long,
-          p.series.map(_.serieId), ordered = false)
-        val (n, warnings0) = validateWide(wide, d, Some(p.freq))
-        // T2 — the reference's trim WARNING (base.py:165-182): the time
-        // column keeps non-empty rows past the last detected date
-        val b = CellGrid.tableBounds(grid, p.sheet, p.timeDataStartCell,
-          p.freq).head()
-        val trimWarning = trimMessage(
-          if (b.isNullAt(0)) None else Some(b.getInt(0)),
-          if (b.isNullAt(1)) None else Some(b.getInt(1)),
-          p.timeDataStartCell)
-        val drift = CellGrid.headerDrift(grid, p.sheet, p.series)
-          .collect().toSeq.map(r =>
-            s"${r.getAs[String]("serie_id")}<>" +
-              s"'${Option(r.getAs[String]("found")).getOrElse("")}'")
-        val warnings = trimWarning.toSeq ++ warnings0 ++
-          (if (drift.nonEmpty) Seq(s"header drift: ${drift.mkString(", ")}")
-           else Seq.empty)
-        val existed = java.nio.file.Files
-          .exists(java.nio.file.Paths.get(outPath))
-        SingleFileCsv.write(wide, outPath, sortBy = Seq("indice_tiempo"))
-        DistributionResult(p.m.catalogId, p.m.datasetId, d,
-          if (warnings.nonEmpty) "WARNING" else "OK",
-          noteOf(warnings, existed, replace), outPath, n)
-      } match {
-        case Success(r) => r
-        case Failure(e) =>
-          DistributionResult(p.m.catalogId, p.m.datasetId, d,
-            "ERROR", e.toString.take(500), outPath, 0L)
-      }
-    }
 
     // T2 WARNING text (reference base.py:165-182: "la distribución
     // termina en la fila N, pero no se detectó fecha en la fila M"),
@@ -311,41 +282,75 @@ object Pipeline {
       case _ => None
     }
 
+    // K1 sink of one judged distribution: errors → ERROR row and no
+    // write; otherwise the file is written and warnings make it WARNING.
     // "Replaced" note (reference base.py:183-191): an OK distribution
     // whose existing output was overwritten under --replace reports
-    // note=Replaced; warnings take precedence (the reference's elif)
-    def noteOf(warnings: Seq[String], existed: Boolean,
-        replace: Boolean): String =
-      if (warnings.nonEmpty) warnings.mkString("; ").take(500)
-      else if (existed && replace) "Replaced"
-      else ""
+    // note=Replaced; warnings take precedence (the reference's elif).
+    def sink(m: ManifestEntry, v: TimeSeriesOps.Verdict,
+        wide: => DataFrame): DistributionResult = {
+      val outPath = outPathOf(m)
+      Try {
+        if (v.errors.nonEmpty)
+          DistributionResult(m.catalogId, m.datasetId, m.distributionId,
+            "ERROR", v.errors.mkString("; ").take(500), outPath, 0L)
+        else {
+          val existed = java.nio.file.Files
+            .exists(java.nio.file.Paths.get(outPath))
+          SingleFileCsv.write(wide, outPath, sortBy = Seq("indice_tiempo"))
+          val note =
+            if (v.warnings.nonEmpty) v.warnings.mkString("; ").take(500)
+            else if (existed && replace) "Replaced"
+            else ""
+          DistributionResult(m.catalogId, m.datasetId, m.distributionId,
+            if (v.warnings.nonEmpty) "WARNING" else "OK", note, outPath,
+            v.periods)
+        }
+      }.recover { case e => errorRow(m, e) }.get
+    }
 
-    // ---- the batch core: ONE combined grid, ONE scrape, ONE job per
-    // validation family — none of it scales with distribution count.
-    // Wrapped in Try (ADVICE r2): a batch-stage failure (e.g. a grid
-    // that errors at execution time) falls back to per-distribution
-    // scrapes so one bad workbook cannot take down the whole run.
-    val excelResults: Seq[DistributionResult] =
-      if (okPreps.isEmpty) Seq.empty
-      else Try {
-        // globally-unique sheet key: url NUL sheet (NUL can't occur in
-        // either part)
-        def sheetKey(url: String, sheet: String) = url + "\u0000" + sheet
-        val combined = okPreps.map(_.url).distinct.sorted
-          .map(u => allGrids(u).select(
-            concat(lit(u), lit("\u0000"), col("sheet")).as("sheet"),
-            col("row"), col("col"), col("value")))
-          .reduce(_.unionByName(_))
-        val specs = okPreps.flatMap(p => p.series.map(sp =>
-          CellGrid.BatchSeriesSpec(p.m.distributionId, sp.serieId,
-            sheetKey(p.url, p.sheet), sp.dataStartCell,
-            p.timeDataStartCell, p.freq.code)))
-        // the batch long form is staged ONCE as parquet partitioned by
-        // distribution: the validation jobs below scan it columnar, and
-        // each per-distribution write reads ONLY its pruned partition —
-        // an in-memory checkpoint would make every write re-scan the
-        // whole catalog's blocks (O(N × catalog) at 20k distributions).
-        val stagePath = s"$outputDir/.graft-batch-long"
+    // The one failure rule (§2.10, the reference's per-distribution
+    // try/except, base.py:155-207): run the batch core over every item;
+    // if it throws, rerun the same core per group, and a group that
+    // still throws becomes ERROR rows for its distributions — one bad
+    // workbook or file never aborts the catalog.
+    def isolated[A](items: Seq[A])(entry: A => ManifestEntry,
+        group: A => String)(core: Seq[A] => Seq[DistributionResult])
+        : Seq[DistributionResult] = {
+      def run(batch: Seq[A]): Seq[DistributionResult] =
+        Try(core(batch)).recover { case e =>
+          val groups = batch.map(group).distinct
+          log.warn(s"batch of ${groups.size} group(s) failed", e)
+          if (groups.size == 1) batch.map(a => errorRow(entry(a), e))
+          else groups.flatMap(g => run(batch.filter(group(_) == g)))
+        }.get
+      if (items.isEmpty) Seq.empty else run(items)
+    }
+
+    // ---- the excel batch core: ONE combined grid, ONE scrape, ONE
+    // validation battery, one job per grid check — none of it scales
+    // with distribution count; the per-distribution cost is the write
+    def processExcel(ps: Seq[ExcelPrep]): Seq[DistributionResult] = {
+      // globally-unique sheet key: url NUL sheet (NUL can't occur in
+      // either part)
+      def sheetKey(url: String, sheet: String) = url + "\u0000" + sheet
+      val combined = ps.map(_.url).distinct.sorted
+        .map(u => allGrids(u).select(
+          concat(lit(u), lit("\u0000"), col("sheet")).as("sheet"),
+          col("row"), col("col"), col("value")))
+        .reduce(_.unionByName(_))
+      val specs = ps.flatMap(p => p.series.map(sp =>
+        CellGrid.BatchSeriesSpec(p.m.distributionId, sp.serieId,
+          sheetKey(p.url, p.sheet), sp.dataStartCell,
+          p.timeDataStartCell, p.freq.code)))
+      // the batch long form is staged ONCE as parquet partitioned by
+      // distribution: the validation jobs below scan it columnar, and
+      // each per-distribution write reads ONLY its pruned partition —
+      // an in-memory checkpoint would make every write re-scan the
+      // whole catalog's blocks (O(N × catalog) at 20k distributions).
+      val stagePath = s"$outputDir/.graft-batch-long"
+      val stage = new org.apache.hadoop.fs.Path(stagePath)
+      try {
         CellGrid.scrapeAll(combined, specs)
           .write.mode("overwrite").partitionBy("distribution_id")
           .parquet(stagePath)
@@ -357,38 +362,13 @@ object Pipeline {
           try { spark.conf.set(infKey, "false"); spark.read.parquet(stagePath) }
           finally spark.conf.set(infKey, infWas)
 
-        // §2.9 per-serie battery — ONE job for the whole catalog
-        val summary = TimeSeriesOps.validationSummary(batchLong,
-            keys = Seq("distribution_id", "serie_id")).collect()
-          .map(r => (r.getAs[String]("distribution_id"),
-            r.getAs[String]("serie_id")) -> r).toMap
-
-        // T3 frequency conformance at each distribution's DECLARED
-        // frequency — one windowed pass, one job
-        val freqSpec = okPreps
-          .map(p => (p.m.distributionId, p.freq.months.getOrElse(0)))
-          .toDF("distribution_id", "freq_months")
-        val gapW = Window
-          .partitionBy(col("distribution_id"), col("serie_id"))
-          .orderBy(col("indice_tiempo"))
-        val gapCounts: Map[String, Long] = batchLong
-          .join(broadcast(freqSpec), Seq("distribution_id"))
-          .withColumn("prev", lag(col("indice_tiempo"), 1).over(gapW))
-          .withColumn("step", when(col("freq_months") > 0,
-            months_between(col("indice_tiempo"), col("prev")) /
-              col("freq_months"))
-            .otherwise(datediff(col("indice_tiempo"), col("prev"))
-              .cast("double")))
-          .filter(col("prev").isNotNull && col("step") =!= 1.0)
-          .groupBy(col("distribution_id"))
-          .agg(count(lit(1)).as("n_gaps"))
-          .collect()
-          .map(r => r.getAs[String]("distribution_id") ->
-            r.getAs[Long]("n_gaps")).toMap
+        val verdicts = TimeSeriesOps.distributionVerdicts(batchLong,
+          ps.map(p => TimeSeriesOps.DistributionSpec(p.m.distributionId,
+            p.series.map(_.serieId), Some(p.freq))))
 
         // V2 header drift — ONE broadcast join for every header cell of
         // every distribution (processors.py:147-148)
-        val driftSpecs = okPreps.flatMap(p => p.headerCells.map {
+        val driftSpecs = ps.flatMap(p => p.headerCells.map {
           case (title, cell) =>
             (p.m.distributionId, title, sheetKey(p.url, p.sheet), cell) })
         val drifts: Map[String, Seq[String]] =
@@ -402,7 +382,7 @@ object Pipeline {
         // (base.py:165-182); composed labels count as detected, so a
         // composed-time sheet never false-warns
         val bounds: Map[String, (Option[Int], Option[Int])] =
-          CellGrid.tableBoundsAll(combined, okPreps.map(p =>
+          CellGrid.tableBoundsAll(combined, ps.map(p =>
               (p.m.distributionId, sheetKey(p.url, p.sheet),
                 p.timeDataStartCell, p.freq.code)).distinct)
             .collect()
@@ -410,115 +390,58 @@ object Pipeline {
               (if (r.isNullAt(1)) None else Some(r.getInt(1))),
               (if (r.isNullAt(2)) None else Some(r.getInt(2))))).toMap
 
-        // distinct periods per distribution = the wide row count
-        val periodCounts: Map[String, Long] = batchLong
-          .groupBy(col("distribution_id"))
-          .agg(countDistinct(col("indice_tiempo")).as("n")).collect()
-          .map(r => r.getAs[String]("distribution_id") ->
-            r.getAs[Long]("n")).toMap
-
-        val batchResults = okPreps.map { p =>
+        ps.map { p =>
           val d = p.m.distributionId
-          val outPath = outPathOf(p.m)
-          Try {
-            val n = periodCounts.getOrElse(d, 0L)
-            if (n == 0) throw new IllegalStateException(
-              s"$d: empty distribution")
-            val errors = Seq.newBuilder[String]
-            val warnings = Seq.newBuilder[String]
-            p.series.foreach { sp =>
-              summary.get((d, sp.serieId)) match {
-                case None => errors += s"${sp.serieId}: no data scraped"
-                case Some(r) =>
-                  if (!r.getAs[Boolean]("is_distinct") ||
-                    !r.getAs[Boolean]("is_monotonic"))
-                    errors += s"${sp.serieId}: duplicate or " +
-                      "non-monotonic time index"
-                  // missing ratio vs the distribution's period count
-                  // (absent cells produce no long rows at all)
-                  val miss = 1.0 - r.getAs[Long]("n_values").toDouble / n
-                  if (miss > 0.5)
-                    errors += f"${sp.serieId}: missing ratio $miss%.3f > 0.5"
-              }
-            }
-            bounds.get(d).foreach { case (de, te) =>
-              trimMessage(de, te, p.timeDataStartCell)
-                .foreach(warnings += _) }
-            gapCounts.get(d).foreach(g =>
-              warnings += s"$g frequency gap(s) vs ${p.freq.iso}")
-            drifts.get(d).foreach(ds =>
-              warnings += s"header drift: ${ds.mkString(", ")}")
-            val errs = errors.result()
-            if (errs.nonEmpty)
-              DistributionResult(p.m.catalogId, p.m.datasetId, d,
-                "ERROR", errs.mkString("; ").take(500), outPath, 0L)
-            else {
-              val slice = batchLong
-                .filter(col("distribution_id") === d)
-                .select(col("serie_id"), col("indice_tiempo"), col("valor"))
-              val wide = TimeSeriesOps.alignWide(slice,
-                p.series.map(_.serieId), ordered = false)
-              val existed = java.nio.file.Files
-                .exists(java.nio.file.Paths.get(outPath))
-              SingleFileCsv.write(wide, outPath,
-                sortBy = Seq("indice_tiempo"))
-              val warns = warnings.result()
-              DistributionResult(p.m.catalogId, p.m.datasetId, d,
-                if (warns.nonEmpty) "WARNING" else "OK",
-                noteOf(warns, existed, replace), outPath, n)
-            }
-          } match {
-            case Success(r) => r
-            case Failure(e) =>
-              DistributionResult(p.m.catalogId, p.m.datasetId, d,
-                "ERROR", e.toString.take(500), outPath, 0L)
-          }
+          val v = verdicts(d)
+          val trim = bounds.get(d).flatMap { case (de, te) =>
+            trimMessage(de, te, p.timeDataStartCell) }
+          val drift = drifts.get(d).map(ds =>
+            s"header drift: ${ds.mkString(", ")}")
+          sink(p.m, v.copy(warnings = trim.toSeq ++ v.warnings ++ drift),
+            TimeSeriesOps.alignWide(
+              batchLong.filter(col("distribution_id") === d)
+                .select(col("serie_id"), col("indice_tiempo"), col("valor")),
+              p.series.map(_.serieId), ordered = false))
         }
-        // every action is complete — drop the staging partition tree
-        val hp = new org.apache.hadoop.fs.Path(stagePath)
-        org.apache.hadoop.fs.FileSystem
-          .get(hp.toUri, spark.sparkContext.hadoopConfiguration)
-          .delete(hp, true)
-        batchResults
-      } match {
-        case Success(rs) => rs
-        case Failure(e) =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "batch excel core failed " +
-              s"(${e.toString.take(200)}); falling back to " +
-              "per-distribution scrapes")
-          okPreps.map(scrapeOneFallback)
-      }
-
-    // ---- per-item path for direct CSV / TXT distributions
-    val directResults = directItems.map { m =>
-      val outPath = outPathOf(m)
-      Try {
-        val wide = m.method match {
-          case Some("csv_file") =>
-            readDistributionCsv(spark, m.downloadURL.get)
-          case Some("text_file") =>
-            readDistributionTxtFromStaging(spark, m, fields, stagingDir)
-          case other =>
-            throw new IllegalArgumentException(s"no processor for $other")
-        }
-        val freq = fields.filter(_.distributionId == m.distributionId)
-          .find(_.specialType.contains("time_index"))
-          .flatMap(_.specialTypeDetail).flatMap(Frequency.fromIso)
-        val (n, warnings) = validateWide(wide, m.distributionId, freq)
-        val existed = java.nio.file.Files
-          .exists(java.nio.file.Paths.get(outPath))
-        SingleFileCsv.write(wide, outPath, sortBy = Seq("indice_tiempo"))
-        DistributionResult(m.catalogId, m.datasetId, m.distributionId,
-          if (warnings.nonEmpty) "WARNING" else "OK",
-          noteOf(warnings, existed, replace), outPath, n)
-      } match {
-        case Success(r) => r
-        case Failure(e) =>
-          DistributionResult(m.catalogId, m.datasetId, m.distributionId,
-            "ERROR", e.toString.take(500), outPath, 0L)
+      } finally {
+        // no attempt, failed or not, leaves the tree in the output dir
+        stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .delete(stage, true)
       }
     }
+    val excelResults = isolated(okPreps)(_.m, _.url)(processExcel)
+
+    // ---- direct CSV / TXT distributions: each file is read on its own
+    // (a read that fails isolates to its ERROR row), then every frame is
+    // judged by the same battery in one pass and written
+    val directPreps: Seq[Either[DistributionResult, DirectPrep]] =
+      directItems.map { m =>
+        Try {
+          val wide = m.method match {
+            case Some("csv_file") =>
+              Ingest.readDistributionTxt(spark, m.downloadURL.get, ",")
+            case Some("text_file") =>
+              readDistributionTxtFromStaging(spark, m, fields, stagingDir)
+            case other =>
+              throw new IllegalArgumentException(s"no processor for $other")
+          }
+          DirectPrep(m, wide, fields
+            .filter(_.distributionId == m.distributionId)
+            .find(_.specialType.contains("time_index"))
+            .flatMap(_.specialTypeDetail).flatMap(Frequency.fromIso))
+        }.toEither.left.map(errorRow(m, _))
+      }
+    def processDirect(ds: Seq[DirectPrep]): Seq[DistributionResult] = {
+      val verdicts = TimeSeriesOps.distributionVerdicts(
+        ds.map(d => TimeSeriesOps.stackWide(d.wide, d.m.distributionId))
+          .reduce(_.unionByName(_)),
+        ds.map(d => TimeSeriesOps.DistributionSpec(d.m.distributionId,
+          d.wide.columns.filter(_ != "indice_tiempo").toSeq, d.freq)))
+      ds.map(d => sink(d.m, verdicts(d.m.distributionId), d.wide))
+    }
+    val directResults = directPreps.collect { case Left(r) => r } ++
+      isolated(directPreps.collect { case Right(d) => d })(
+        _.m, _.m.distributionId)(processDirect)
 
     val results =
       skippedResults ++ prepErrors ++ excelResults ++ directResults
@@ -580,70 +503,5 @@ object Pipeline {
         .flatMap(_.fieldTitle).getOrElse("indice_tiempo"),
       declaredSeries = myFields.filter(_.specialType.isEmpty)
         .flatMap(_.fieldTitle))
-  }
-
-  /** S5 — direct-download CSV distribution: header CSV with an
-    * `indice_tiempo` date column and double series columns. */
-  def readDistributionCsv(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("header", "true").csv(path)
-    val valueCols = raw.columns.filter(_ != "indice_tiempo")
-    raw.select(
-      to_date(col("indice_tiempo")).as("indice_tiempo") +:
-        valueCols.map(c => GF.normalizeValue(col(c)).as(c)): _*)
-  }
-
-  /** §2.9 — the validation battery for a WIDE frame (direct CSV/TXT
-    * path), in ONE aggregation job: row counts, null/duplicate time
-    * index, per-column missing ratio, and frequency conformance at the
-    * declared frequency. Hard violations throw (caught by the per-item
-    * Try → ERROR row); soft ones return as WARNING messages — the
-    * reference's warning/error split (base.py:165-207). */
-  private def validateWide(wide: DataFrame, disId: String,
-      freq: Option[Frequency]): (Long, Seq[String]) = {
-    val valueCols = wide.columns.filter(_ != "indice_tiempo").toSeq
-    // one distribution = one small frame; the single-partition window
-    // is the per-item path only (the excel batch path windows by key).
-    // A constant partition key keeps WindowExec's partition spec
-    // non-empty (no global-window warning) with identical semantics.
-    val w = Window.partitionBy(col("_p")).orderBy(col("indice_tiempo"))
-    val step: Column = freq.flatMap(_.months) match {
-      case Some(mo) =>
-        months_between(col("indice_tiempo"), col("prev")) / mo
-      case None =>
-        datediff(col("indice_tiempo"), col("prev")).cast("double")
-    }
-    val gapAgg =
-      if (freq.isDefined)
-        sum(when(col("prev").isNotNull && step =!= 1.0, 1L).otherwise(0L))
-          .as("n_gaps")
-      else lit(0L).as("n_gaps")
-    val aggCols = Seq(
-      count(lit(1)).as("n"),
-      countDistinct(col("indice_tiempo")).as("n_distinct"),
-      count(when(col("indice_tiempo").isNull, 1)).as("n_null_time"),
-      gapAgg) ++
-      valueCols.zipWithIndex.map { case (c, i) =>
-        count(col(c)).as(s"nv_$i") }
-    val row = wide
-      .withColumn("_p", lit(0))
-      .withColumn("prev", lag(col("indice_tiempo"), 1).over(w))
-      .agg(aggCols.head, aggCols.tail: _*).head()
-    val n = row.getAs[Long]("n")
-    if (n == 0)
-      throw new IllegalStateException(s"$disId: empty distribution")
-    if (row.getAs[Long]("n_null_time") > 0)
-      throw new IllegalStateException(s"$disId: null time index")
-    if (row.getAs[Long]("n_distinct") != n)
-      throw new IllegalStateException(s"$disId: duplicate time index")
-    valueCols.zipWithIndex.foreach { case (c, i) =>
-      val miss = 1.0 - row.getAs[Long](s"nv_$i").toDouble / n
-      if (miss > 0.5) throw new IllegalStateException(
-        f"$disId: $c missing ratio $miss%.3f > 0.5")
-    }
-    val warnings = Seq.newBuilder[String]
-    val gaps = row.getAs[Long]("n_gaps")
-    if (gaps > 0)
-      warnings += s"$gaps frequency gap(s) vs ${freq.map(_.iso).getOrElse("")}"
-    (n, warnings.result())
   }
 }

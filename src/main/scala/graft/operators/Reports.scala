@@ -37,14 +37,6 @@ object Reports {
     if (env != null && env.contains("prod")) base else s"[$env] $base"
   }
 
-  /** A1 — status counts: total / per-status conditional counts. */
-  def statusCounts(report: DataFrame, statusCol: String): DataFrame =
-    report.agg(
-      count(lit(1)).as("total"),
-      count(when(col(statusCol) === "OK", 1)).as("n_ok"),
-      count(when(col(statusCol) === "ERROR", 1)).as("n_error"),
-      count(when(col(statusCol) === "WARNING", 1)).as("n_warning"))
-
   /** A2 — success percentage: round(ok/total*100, 3), 0.0 when total=0
     * (reference base.py:994-1005). */
   def successPercentage(ok: Column, total: Column): Column =

@@ -49,15 +49,6 @@ object TextAnalysis {
     when(best.getField("score") > 0, best.getField("lang")).otherwise(lit("und"))
   }
 
-  /** Per-language stopword scores as explicit columns (for inspection /
-    * oracle queries). */
-  def langScores(textCol: Column): Seq[(String, Column)] = {
-    val toks = GF.wsTokens(lower(textCol))
-    StopwordsByLang.map { case (lang, words) =>
-      lang -> tokenMatches(toks, words).cast("long")
-    }
-  }
-
   /** Adds one `score_<lang>` column per language, tokenizing once. */
   def withLangScores(df: DataFrame, textCol: String): DataFrame = {
     val scored = StopwordsByLang.foldLeft(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.model.Frequency
@@ -75,6 +75,109 @@ object TimeSeriesOps {
       .withColumn("is_valid",
         col("n_rows") > 0 && col("is_monotonic") && col("is_distinct") &&
           col("missing_ratio") <= maxMissingRatio)
+  }
+
+  /** One distribution for [[distributionVerdicts]]: its declared series
+    * and, when declared, its frequency. */
+  final case class DistributionSpec(distributionId: String,
+      series: Seq[String], freq: Option[Frequency])
+
+  /** Verdict on one distribution: its period count (the wide row
+    * count), hard violations (ERROR, no write) and soft ones (WARNING,
+    * file still written) — the reference's split, base.py:165-207. */
+  final case class Verdict(periods: Long, errors: Seq[String],
+      warnings: Seq[String])
+
+  /** §2.9 + T3 — the ETL validation battery for MANY distributions at
+    * once over the long form `(distribution_id, serie_id, indice_tiempo,
+    * valor)`. Time checks judge each distribution's distinct time index
+    * (the reference's `validate_distribution`, SURVEY T3): null or
+    * duplicate times and empty distributions are errors, steps off the
+    * declared frequency are warnings — an empty cell is not a gap. A
+    * declared serie missing more than `maxMissingRatio` of the periods
+    * is an error. One collect, however many distributions. */
+  def distributionVerdicts(long: DataFrame, specs: Seq[DistributionSpec],
+      maxMissingRatio: Double = 0.5): Map[String, Verdict] = {
+    val spark = long.sparkSession
+    import spark.implicits._
+    val d = col("distribution_id")
+    val t = col("indice_tiempo")
+    // months per period, 0 for daily, null when no frequency is declared
+    val freqs = specs.map(s => (s.distributionId,
+        s.freq.map(_.months.getOrElse(0))))
+      .toDF("distribution_id", "freq_months")
+    val step = when(col("freq_months") > 0,
+        months_between(t, col("prev")) / col("freq_months"))
+      .otherwise(datediff(t, col("prev")).cast("double"))
+    // per period, rows beyond one per serie are duplicate times (the
+    // serie-less rows of a frame with no series count as one serie);
+    // both aggregations combine map-side, so the long form is never
+    // shuffled row by row
+    val byTime = long
+      .groupBy(d, t)
+      .agg((count(lit(1)) -
+        size(collect_set(coalesce(col("serie_id"), lit(""))))).as("extra"))
+      .join(broadcast(freqs), Seq("distribution_id"))
+      .withColumn("prev",
+        lag(t, 1).over(Window.partitionBy(d).orderBy(t)))
+      .groupBy(d)
+      .agg(
+        count(t).as("periods"),
+        count(when(t.isNull, 1)).as("null_times"),
+        max(col("extra")).as("extra_rows"),
+        count(when(col("freq_months").isNotNull && col("prev").isNotNull &&
+          step =!= 1.0, 1)).as("gaps"))
+    val bySerie = long
+      .groupBy(d, col("serie_id")).agg(count(col("valor")).as("n_values"))
+      .groupBy(d)
+      .agg(collect_list(struct(col("serie_id"), col("n_values")))
+        .as("values"))
+    val rows = byTime.join(bySerie, Seq("distribution_id")).collect()
+      .map(r => r.getAs[String]("distribution_id") -> r).toMap
+
+    specs.map { s =>
+      val id = s.distributionId
+      val row = rows.get(id)
+      val periods = row.fold(0L)(_.getAs[Long]("periods"))
+      val errors =
+        if (periods == 0) Seq("empty distribution")
+        else {
+          val r = row.get
+          val values = r.getAs[Seq[Row]]("values")
+            .map(v => v.getString(0) -> v.getLong(1)).toMap
+          Seq("null time index" -> r.getAs[Long]("null_times"),
+              "duplicate time index" -> r.getAs[Long]("extra_rows"))
+            .collect { case (e, n) if n > 0 => e } ++
+          s.series.flatMap { serie =>
+            val miss =
+              1.0 - values.getOrElse(serie, 0L).toDouble / periods
+            if (miss > maxMissingRatio)
+              Some(f"$serie: missing ratio $miss%.3f > $maxMissingRatio")
+            else None
+          }
+        }
+      val gaps = row.fold(0L)(_.getAs[Long]("gaps"))
+      id -> Verdict(periods, errors,
+        if (gaps > 0)
+          Seq(s"$gaps frequency gap(s) vs ${s.freq.map(_.iso).getOrElse("")}")
+        else Seq.empty)
+    }.toMap
+  }
+
+  /** Wide frame of ONE distribution → the long form of
+    * [[distributionVerdicts]]: one row per (period, serie), all-null
+    * rows kept, so a wide row with no values still counts as a period. */
+  def stackWide(wide: DataFrame, distributionId: String): DataFrame = {
+    val series = wide.columns.filter(_ != "indice_tiempo").toSeq
+    val cell =
+      if (series.isEmpty) lit(null)
+        .cast("struct<serie_id:string,valor:double>")
+      else explode(array(series.map(c =>
+        struct(lit(c).as("serie_id"), col(c).as("valor"))): _*))
+    wide.select(lit(distributionId).as("distribution_id"),
+        cell.as("cell"), col("indice_tiempo"))
+      .select(col("distribution_id"), col("cell.serie_id").as("serie_id"),
+        col("indice_tiempo"), col("cell.valor").as("valor"))
   }
 
   /** J1 — align series of one distribution on the time index: long form

@@ -39,83 +39,21 @@ object CellGrid {
 
   /** Extract one distribution from a grid: the time index column plus N
     * value series, aligned on sheet row number, returned in long form
-    * `(serie_id, indice_tiempo: date, valor: double)`.
+    * `(serie_id, indice_tiempo: date, valor: double)` — [[scrapeAll]]
+    * over a one-distribution spec.
     *
     * Time labels are parsed leniently (ISO date, year, year+period) —
     * the composed-time fallback of the reference (processors.py:202-221)
     * becomes a coalesce over parse attempts instead of a try/except.
-    * Rows whose time label fails to parse after `tableEnd` detection are
-    * dropped (T2 trim); callers can diff row bounds to emit the WARNING.
+    * Rows whose time label fails to parse are dropped (T2 trim);
+    * [[tableBoundsAll]] diffs row bounds for the WARNING.
     */
   def scrapeDistribution(grid: DataFrame, sheet: String,
       timeHeaderCell: String, timeDataStartCell: String, freq: Frequency,
-      series: Seq[SeriesSpec]): DataFrame = {
-    val timeSlice = timeSlice1(grid, sheet, timeDataStartCell, freq)
-      .select(col("row"), col("indice_tiempo"))
-      .filter(col("indice_tiempo").isNotNull)
-
-    // ONE pass over the grid for all series: the per-series coordinate
-    // windows become a broadcast spec joined on column index — not one
-    // grid scan per series.
-    val sparkSession = grid.sparkSession
-    import sparkSession.implicits._
-    val spec = series.map(sp =>
-      (sp.serieId, colIdx(sp.dataStartCell), rowIdx(sp.dataStartCell)))
-      .toDF("serie_id", "series_col", "series_start")
-    val values = grid.filter(col("sheet") === sheet)
-      .join(broadcast(spec), col("col") === col("series_col") &&
-        col("row") >= col("series_start"))
-      .select(col("row"), col("serie_id"),
-        GF.normalizeValue(col("value")).as("valor"))
-
-    // Row-number equi-join aligns every series with the time index —
-    // the J1 "concat on datetime index" of the reference. The time side
-    // is one column of one sheet: broadcastable.
-    timeSlice.join(values, Seq("row"))
+      series: Seq[SeriesSpec]): DataFrame =
+    scrapeAll(grid, series.map(sp => BatchSeriesSpec("", sp.serieId, sheet,
+        sp.dataStartCell, timeDataStartCell, freq.code)))
       .select(col("serie_id"), col("indice_tiempo"), col("valor"))
-  }
-
-  /** One sheet's time column, UNFILTERED: `(row, value, indice_tiempo)`
-    * where `value` is the raw time-column cell (null when the row only
-    * has a year marker one column left) and `indice_tiempo` the parsed
-    * date or null. Single-cell labels parse directly; multi-cell
-    * composed time forward-fills sparse year markers down the slice and
-    * composes them with period labels — the xlseries time_composed=True
-    * path as one coalesce instead of a try/except. Year markers may
-    * live in the time column itself ("2019" on its own row) OR one
-    * column to its left (the two-column year|period layout); both are
-    * read in the same pass via a per-row conditional aggregate.
-    * Shared by [[scrapeDistribution]] (which keeps parsed rows) and
-    * [[tableBounds]] (which diffs parsed vs non-empty bounds — T2). */
-  private def timeSlice1(grid: DataFrame, sheet: String,
-      timeDataStartCell: String, freq: Frequency): DataFrame = {
-    val timeCol = colIdx(timeDataStartCell)
-    val timeStart = rowIdx(timeDataStartCell)
-    // partitioned by sheet — constant after the filter, so the fill is
-    // semantically global over this slice, but WindowExec gets a
-    // partition spec (one sheet's time column is a few thousand rows;
-    // the batch path, scrapeAll, partitions by distribution)
-    val fillW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("sheet"))
-      .orderBy(col("row"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    grid
-      .filter(col("sheet") === sheet && col("row") >= timeStart &&
-        (col("col") === timeCol || col("col") === timeCol - 1))
-      .groupBy(col("sheet"), col("row"))
-      .agg(
-        max(when(col("col") === timeCol, col("value"))).as("value"),
-        max(when(col("col") === timeCol - 1, col("value")))
-          .as("left_value"))
-      .withColumn("yr_filled",
-        last(coalesce(yearMarker(col("value")),
-          yearMarker(col("left_value"))), ignoreNulls = true).over(fillW))
-      .select(col("row"), col("value"),
-        coalesce(
-          parseTimeLabel(col("value"), freq),
-          parseComposedLabel(col("value"), col("yr_filled"),
-            freq.code)).as("indice_tiempo"))
-  }
 
   /** Batch spec for [[scrapeAll]]: one row per series across ALL
     * distributions/workbooks. */
@@ -170,7 +108,12 @@ object CellGrid {
     * timeDataStartCell, freqCode)`. Single-cell labels parse leniently;
     * composed time fills year markers forward within each
     * distribution's time column (one narrow window keyed by
-    * distribution) and composes with the spec-declared frequency. */
+    * distribution) and composes with the spec-declared frequency. Year
+    * markers may sit in the time column itself ("2019" on its own row)
+    * or one column to its left (the two-column year|period layout);
+    * both are read in the same pass by a per-row conditional
+    * aggregate. `value` is null on rows holding only a left year
+    * marker. */
   private def timeSliceAll(grid: DataFrame,
       specs: Seq[(String, String, String, String)]): DataFrame = {
     val sparkSession = grid.sparkSession
@@ -202,7 +145,7 @@ object CellGrid {
           yearMarker(col("left_value"))), ignoreNulls = true).over(fillW))
       .select(col("distribution_id"), col("s"), col("row"), col("value"),
         coalesce(
-          parseTimeLabel(col("value"), graft.model.Frequency.Monthly),
+          parseTimeLabel(col("value")),
           parseComposedLabel(col("value"), col("yr_filled"), col("freq")))
           .as("indice_tiempo"))
   }
@@ -223,27 +166,11 @@ object CellGrid {
           .as("detected_end"),
         max(when(col("value").isNotNull, col("row"))).as("table_end"))
 
-  /** Header-drift guard (validate_distribution_scraping,
-    * reference processors.py:147-148): the header cell content must match
-    * the declared serie id/title. Returns violation rows. */
-  def headerDrift(grid: DataFrame, sheet: String,
-      series: Seq[SeriesSpec]): DataFrame = {
-    val expected = series.map(s =>
-      (s.serieId, colIdx(s.headerCell), rowIdx(s.headerCell)))
-    val sparkSession = grid.sparkSession
-    import sparkSession.implicits._
-    val exp = expected.toDF("serie_id", "col", "row")
-    broadcast(exp).join(grid.filter(col("sheet") === sheet), Seq("col", "row"), "left")
-      .filter(col("value").isNull ||
-        GF.stripSpaces(col("value")) =!= col("serie_id"))
-      .select(col("serie_id"), col("col"), col("row"),
-        col("value").as("found"))
-  }
-
-  /** V2 batched — header drift for every declared header of every
-    * distribution in ONE broadcast join over the combined grid (the
-    * per-sheet [[headerDrift]] is the single-workbook form). Specs are
-    * `(distributionId, serieId, sheet, headerCell)`. */
+  /** V2 — header-drift guard (validate_distribution_scraping,
+    * reference processors.py:147-148): each declared header cell must
+    * hold its serie id/title. Every header of every distribution in ONE
+    * broadcast join over the combined grid; returns violation rows.
+    * Specs are `(distributionId, serieId, sheet, headerCell)`. */
   def headerDriftAll(grid: DataFrame,
       specs: Seq[(String, String, String, String)]): DataFrame = {
     val sparkSession = grid.sparkSession
@@ -270,24 +197,13 @@ object CellGrid {
     * `freqCode` the Frequency.code column ("Q"/"S"/"M"/...). Returns
     * null when the label is not a period label — callers coalesce with
     * [[parseTimeLabel]], which IS the reference's try-composed/fallback
-    * collapsed into one expression. */
+    * collapsed into one expression. `freqCode` must be a real column
+    * (the batch spec's): a literal would compare two identical literals,
+    * which Spark logs as a trivially-true predicate on every plan
+    * build. */
   def parseComposedLabel(v: Column, yearFilled: Column,
-      freqCode: Column): Column =
-    composedLabel(v, yearFilled, code => freqCode === lit(code))
-
-  /** Statically-known frequency variant: the freq gates resolve to
-    * boolean literals at plan-build time instead of a column
-    * comparison — `lit(freq.code) === "Q"` would make Column log a
-    * "trivially true equals predicate" WARN on every plan build (both
-    * sides are the same literal node, Column.checkTrivialPredicate).
-    * The batch path keeps the Column overload (a real spec column
-    * against a literal never trips the check). */
-  def parseComposedLabel(v: Column, yearFilled: Column,
-      freqCode: String): Column =
-    composedLabel(v, yearFilled, code => lit(freqCode == code))
-
-  private def composedLabel(v: Column, yearFilled: Column,
-      isFreq: String => Column): Column = {
+      freqCode: Column): Column = {
+    def isFreq(code: String): Column = freqCode === lit(code)
     val t = upper(trim(v))
     // quarter number (1-4) from roman, "Qn", "n", or "1er trim." forms
     val quarter = coalesce(
@@ -327,12 +243,12 @@ object CellGrid {
     when(m =!= "", m)
   }
 
-  /** T1 — lenient time-label parse at a declared frequency.
+  /** T1 — lenient single-cell time-label parse.
     * Tries, in order: ISO date; year-start for "YYYY"; "YYYY-Qn"/"YYYY Qn"
     * quarter composition; "YYYY-Sn" semester composition; month label
     * "YYYY-MM". This is the declarative analogue of the reference's
     * composed-time retry (processors.py:202-221). */
-  def parseTimeLabel(v: Column, freq: Frequency): Column = {
+  def parseTimeLabel(v: Column): Column = {
     val t = trim(v)
     // every parse is regex-guarded so malformed labels yield null, not an
     // ANSI-mode DateTimeException
@@ -351,27 +267,6 @@ object CellGrid {
         lit("-01"))))
     coalesce(iso, quarter, semester, yearMonth, year)
   }
-
-  /** T2 — table-end detection for ONE sheet: `detected_end` = last grid
-    * row (>= dataStart) in the time column whose label parsed to a date
-    * (single-cell OR composed), `table_end` = last non-empty row.
-    * `table_end > detected_end` is the reference's trim WARNING
-    * (base.py:165-182); the batch form is [[tableBoundsAll]]. */
-  def tableBounds(grid: DataFrame, sheet: String, timeDataStartCell: String,
-      freq: Frequency): DataFrame =
-    timeSlice1(grid, sheet, timeDataStartCell, freq)
-      .agg(
-        max(when(col("indice_tiempo").isNotNull, col("row")))
-          .as("detected_end"),
-        max(when(col("value").isNotNull, col("row"))).as("table_end"))
-
-  /** Wide view of a scraped distribution: one row per period, one column
-    * per serie (the reference's output CSV shape, base.py:266-279). */
-  def toWide(longDf: DataFrame): DataFrame =
-    longDf.groupBy("indice_tiempo")
-      .pivot("serie_id")
-      .agg(first("valor"))
-      .orderBy("indice_tiempo")
 
   /** S8 — workbook cache: each distinct grid is typically reused by many
     * distributions of the same catalog; persist it once. */

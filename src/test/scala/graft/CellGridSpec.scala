@@ -44,7 +44,7 @@ class CellGridSpec extends SparkSpec {
     val labels = Seq("2020-Q4", "2021 s2", "2021-07", "2019", "2020-02-29",
       "garbage").toDF("v")
     val parsed = labels
-      .select(CellGrid.parseTimeLabel(col("v"), Frequency.Quarterly))
+      .select(CellGrid.parseTimeLabel(col("v")))
       .collect().map(r => Option(r.get(0)).map(_.toString))
     assert(parsed.toSeq == Seq(Some("2020-10-01"), Some("2021-07-01"),
       Some("2021-07-01"), Some("2019-01-01"), Some("2020-02-29"), None))
@@ -114,7 +114,7 @@ class CellGridSpec extends SparkSpec {
   }
 
   test("tableBounds flags the trim warning (T2)") {
-    val b = CellGrid.tableBounds(grid, "data", "A2", Frequency.Quarterly)
+    val b = CellGrid.tableBoundsAll(grid, Seq(("d", "data", "A2", "Q")))
       .head()
     assert(b.getAs[Int]("detected_end") == 4)
     assert(b.getAs[Int]("table_end") == 5) // junk row -> WARNING in the report
@@ -122,7 +122,9 @@ class CellGridSpec extends SparkSpec {
 
   test("headerDrift catches coordinate drift (validate_distribution_scraping)") {
     val drifted = series :+ CellGrid.SeriesSpec("serie_zz", "D1", "D2")
-    val bad = CellGrid.headerDrift(grid, "data", drifted).collect()
+    val bad = CellGrid.headerDriftAll(grid,
+        drifted.map(s => ("d", s.serieId, "data", s.headerCell)))
+      .drop("distribution_id").collect()
     assert(bad.map(_.getString(0)).toSet == Set("serie_zz"))
   }
 

@@ -278,5 +278,100 @@ class PipelineSpec extends SparkSpec {
     // the healthy distribution's CSV actually landed via the fallback
     assert(Files.exists(Paths.get(out,
       "catalog/fbcat/dataset/1/distribution/1.1/download/1.1.csv")))
+    // the failed batch attempt left no staging tree behind
+    assert(!Files.exists(Paths.get(out, ".graft-batch-long")))
+  }
+
+  test("empty value cells are not frequency gaps on either path (T3)") {
+    // a clean monthly excel table where serie sC lacks two cells: the
+    // distribution's time index is complete, so no gap warning
+    val grid = (Seq(("h", 1, 1, "indice_tiempo"), ("h", 1, 2, "sB"),
+      ("h", 1, 3, "sC")) ++
+      (2 to 13).flatMap(r => Seq(
+        ("h", r, 1, f"2021-${r - 1}%02d"), ("h", r, 2, s"$r.5")) ++
+        (if (r == 5 || r == 9) Seq.empty else Seq(("h", r, 3, s"$r.25")))))
+      .toDF("sheet", "row", "col", "value")
+    val csv = workDir.resolve("sparse.csv")
+    Files.writeString(csv,
+      """indice_tiempo,sX,sY
+        |2021-01-01,1.0,2.0
+        |2021-02-01,,3.0
+        |2021-03-01,4.0,5.0
+        |""".stripMargin)
+    val manifest = Seq(
+      Pipeline.ManifestEntry("gapcat", "1", "1.1", Some("excel_file"), None,
+        Some("mem://sparse"), Some("h"), None),
+      Pipeline.ManifestEntry("gapcat", "2", "2.1", Some("csv_file"),
+        Some(csv.toString), None, None, None))
+    val fields = Seq(
+      Pipeline.FieldEntry("1.1", Some("indice_tiempo"), Some("time_index"),
+        Some("R/P1M"), Some("A1"), Some("A2")),
+      Pipeline.FieldEntry("1.1", Some("sB"), None, None, Some("B1"),
+        Some("B2")),
+      Pipeline.FieldEntry("1.1", Some("sC"), None, None, Some("C1"),
+        Some("C2")),
+      Pipeline.FieldEntry("2.1", Some("indice_tiempo"), Some("time_index"),
+        Some("R/P1M"), None, None))
+    val out = workDir.resolve("sparse").toString
+    val rows = Pipeline.process(spark, manifest, fields, out,
+        Map("mem://sparse" -> grid), None, replace = true)
+      .report.collect()
+      .map(r => r.getAs[String]("distributionId") ->
+        (r.getAs[String]("distribution_status"), r.getAs[String]("message")))
+      .toMap
+    assert(rows == Map("1.1" -> ("OK", ""), "2.1" -> ("OK", "")), rows)
+    // the excel output keeps the empty cells as empty values
+    val lines = Files.readAllLines(Paths.get(out,
+      "catalog/gapcat/dataset/1/distribution/1.1/download/1.1.csv"))
+    assert(lines.size == 13 && lines.get(4).startsWith("2021-04-01,5.5,"),
+      lines)
+  }
+
+  test("direct CSV path: validation job count stays O(1)") {
+    // n and then 2n direct CSV distributions: each costs its own header
+    // read and K1 write, but the validation battery must stay a fixed
+    // number of jobs for the whole catalog
+    def validationJobs(n: Int): Int = {
+      val dir = Files.createTempDirectory(workDir, s"direct$n")
+      val manifest = (1 to n).map { d =>
+        val csv = dir.resolve(s"src$d.csv")
+        Files.writeString(csv, "indice_tiempo,v\n" + (1 to 12)
+          .map(m => f"2021-$m%02d-01,$d.$m").mkString("\n") + "\n")
+        Pipeline.ManifestEntry("dircat", "1", s"1.$d", Some("csv_file"),
+          Some(csv.toString), None, None, None)
+      }
+      val fields = (1 to n).map(d => Pipeline.FieldEntry(s"1.$d",
+        Some("indice_tiempo"), Some("time_index"), Some("R/P1M"), None,
+        None))
+      // jobs started outside the reads (Ingest) and the K1 sink
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val frame = js.stageInfos.flatMap(_.details.split('\n'))
+            .map(_.trim).find(_.startsWith("graft.")).getOrElse("")
+          if (!frame.startsWith("graft.sources.Ingest") &&
+            !frame.startsWith("graft.sinks.")) jobs.incrementAndGet()
+          ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try {
+        val statuses = Pipeline.process(spark, manifest, fields,
+            dir.resolve("out").toString, Map.empty, None, replace = true)
+          .report.collect().map(_.getAs[String]("distribution_status"))
+        assert(statuses.toSeq == Seq.fill(n)("OK"), statuses.toSeq)
+        Thread.sleep(1000) // let the async listener bus drain
+      } finally {
+        spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      jobs.get()
+    }
+    val (small, large) = (validationJobs(3), validationJobs(6))
+    assert(large <= small,
+      s"validation jobs grew with n: $small for 3, $large for 6")
   }
 }

@@ -467,7 +467,8 @@ class PropertySpec extends SparkSpec {
             ("s", start + nDates + j, 1, s"fuente $j"))
       val grid = rows.toDF("sheet", "row", "col", "value")
       val b = sources.CellGrid
-        .tableBounds(grid, "s", "A3", Frequency.Monthly).head()
+        .tableBoundsAll(grid, Seq(("d", "s", "A3", "M")))
+        .drop("distribution_id").head()
       assert(b.getInt(0) == start + nDates - 1, "detected_end")
       assert(b.getInt(1) == start + nDates + nJunk - 1, "table_end")
     }
@@ -693,9 +694,9 @@ class PropertySpec extends SparkSpec {
   }
 
   test("weightedMedian: wide value domain spans many 4096-buckets (generated)") {
-    // exercises the two-level cumulative-sum path across bucket
-    // boundaries, negative values and multiple groups; reference is
-    // the same expanded-multiset lower median
+    // stress-tests the single-window weightedMedian over a value domain
+    // far wider than one 4096-bucket, with negative values and multiple
+    // groups; reference is the same expanded-multiset lower median
     import graft.operators.Profiling
     val gen = Gen.listOfN(60, Gen.zip(Gen.oneOf("a", "b"),
       Gen.choose(-300000L, 300000L), Gen.choose(1L, 4L)))

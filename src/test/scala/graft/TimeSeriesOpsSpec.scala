@@ -47,6 +47,53 @@ class TimeSeriesOpsSpec extends SparkSpec {
     assert(!m("holey").getAs[Boolean]("is_valid"))
   }
 
+  test("distributionVerdicts judges each distribution's time index (§2.9/T3)") {
+    import TimeSeriesOps.{DistributionSpec, Verdict}
+    val long = Seq(
+      // "sparse": b lacks a cell on every other period — no gap
+      ("sparse", "a", "2020-01-01", Some(1.0)),
+      ("sparse", "a", "2020-02-01", Some(2.0)),
+      ("sparse", "a", "2020-03-01", Some(3.0)),
+      ("sparse", "b", "2020-01-01", Some(1.0)),
+      ("sparse", "b", "2020-03-01", Some(3.0)),
+      // "gap": March missing from the index, b mostly empty
+      ("gap", "a", "2020-01-01", Some(1.0)),
+      ("gap", "a", "2020-02-01", Some(2.0)),
+      ("gap", "a", "2020-04-01", Some(4.0)),
+      ("gap", "b", "2020-01-01", None),
+      // "dup": a period repeats for one serie
+      ("dup", "a", "2020-01-01", Some(1.0)),
+      ("dup", "a", "2020-01-01", Some(2.0)),
+      // "nullt": a row without a time
+      ("nullt", "a", "2020-01-01", Some(1.0)),
+      ("nullt", "a", null, None))
+      .toDF("distribution_id", "serie_id", "indice_tiempo", "valor")
+      .withColumn("indice_tiempo", to_date(col("indice_tiempo")))
+    val m = Some(Frequency.Monthly)
+    val v = TimeSeriesOps.distributionVerdicts(long, Seq(
+      DistributionSpec("sparse", Seq("a", "b"), m),
+      DistributionSpec("gap", Seq("a", "b"), m),
+      DistributionSpec("dup", Seq("a"), None),
+      DistributionSpec("nullt", Seq("a"), m),
+      DistributionSpec("absent", Seq("a"), m)))
+    assert(v("sparse") == Verdict(3, Seq.empty, Seq.empty))
+    assert(v("gap") == Verdict(3, Seq("b: missing ratio 1.000 > 0.5"),
+      Seq("1 frequency gap(s) vs R/P1M")))
+    assert(v("dup") == Verdict(1, Seq("duplicate time index"), Seq.empty))
+    assert(v("nullt") == Verdict(1, Seq("null time index"), Seq.empty))
+    assert(v("absent") == Verdict(0, Seq("empty distribution"), Seq.empty))
+
+    // a wide frame without series still stacks one row per period
+    val bare = Seq("2020-01-01", "2020-01-01").toDF("t")
+      .select(to_date(col("t")).as("indice_tiempo"))
+    val stacked = TimeSeriesOps.stackWide(bare, "bare")
+    assert(stacked.columns.toSeq ==
+      Seq("distribution_id", "serie_id", "indice_tiempo", "valor"))
+    assert(TimeSeriesOps.distributionVerdicts(stacked,
+        Seq(DistributionSpec("bare", Seq.empty, m)))("bare") ==
+      Verdict(1, Seq("duplicate time index"), Seq.empty))
+  }
+
   test("completeCalendar fills gaps at declared frequency") {
     val s = Seq(("a", d("2020-01-01"), 1.0), ("a", d("2020-04-01"), 2.0))
       .toDF("serie_id", "indice_tiempo", "valor")
