@@ -431,10 +431,20 @@ object Pipeline {
             .flatMap(_.specialTypeDetail).flatMap(Frequency.fromIso))
         }.toEither.left.map(errorRow(m, _))
       }
+    // a balanced union: folding the frames left to right re-analyses
+    // the growing plan once per file, quadratic in the file count
+    def unionAll(fs: Seq[DataFrame]): DataFrame =
+      if (fs.size == 1) fs.head
+      else fs.splitAt(fs.size / 2) match {
+        case (a, b) => unionAll(a).unionByName(unionAll(b))
+      }
     def processDirect(ds: Seq[DirectPrep]): Seq[DistributionResult] = {
+      val stacked = unionAll(ds.map(d =>
+        TimeSeriesOps.stackWide(d.wide, d.m.distributionId)))
+      // one task per core, not per file: every task deserialises the
+      // whole union's plan, so a task per file is quadratic too
       val verdicts = TimeSeriesOps.distributionVerdicts(
-        ds.map(d => TimeSeriesOps.stackWide(d.wide, d.m.distributionId))
-          .reduce(_.unionByName(_)),
+        stacked.coalesce(spark.sparkContext.defaultParallelism),
         ds.map(d => TimeSeriesOps.DistributionSpec(d.m.distributionId,
           d.wide.columns.filter(_ != "indice_tiempo").toSeq, d.freq)))
       ds.map(d => sink(d.m, verdicts(d.m.distributionId), d.wide))

@@ -88,16 +88,20 @@ object TimeSeriesOps {
   final case class Verdict(periods: Long, errors: Seq[String],
       warnings: Seq[String])
 
+  /** A declared serie missing more than this share of its
+    * distribution's periods is an error (the reference's 0.5). */
+  private val MaxMissingRatio = 0.5
+
   /** §2.9 + T3 — the ETL validation battery for MANY distributions at
     * once over the long form `(distribution_id, serie_id, indice_tiempo,
     * valor)`. Time checks judge each distribution's distinct time index
     * (the reference's `validate_distribution`, SURVEY T3): null or
     * duplicate times and empty distributions are errors, steps off the
     * declared frequency are warnings — an empty cell is not a gap. A
-    * declared serie missing more than `maxMissingRatio` of the periods
-    * is an error. One collect, however many distributions. */
-  def distributionVerdicts(long: DataFrame, specs: Seq[DistributionSpec],
-      maxMissingRatio: Double = 0.5): Map[String, Verdict] = {
+    * declared serie with no rows, or missing more than half of the
+    * periods, is an error. One collect, however many distributions. */
+  def distributionVerdicts(long: DataFrame,
+      specs: Seq[DistributionSpec]): Map[String, Verdict] = {
     val spark = long.sparkSession
     import spark.implicits._
     val d = col("distribution_id")
@@ -106,33 +110,35 @@ object TimeSeriesOps {
     val freqs = specs.map(s => (s.distributionId,
         s.freq.map(_.months.getOrElse(0))))
       .toDF("distribution_id", "freq_months")
+    val prev = col("prev")
     val step = when(col("freq_months") > 0,
-        months_between(t, col("prev")) / col("freq_months"))
-      .otherwise(datediff(t, col("prev")).cast("double"))
-    // per period, rows beyond one per serie are duplicate times (the
-    // serie-less rows of a frame with no series count as one serie);
-    // both aggregations combine map-side, so the long form is never
-    // shuffled row by row
-    val byTime = long
-      .groupBy(d, t)
-      .agg((count(lit(1)) -
-        size(collect_set(coalesce(col("serie_id"), lit(""))))).as("extra"))
+        months_between(t, prev) / col("freq_months"))
+      .otherwise(datediff(t, prev).cast("double"))
+    // cells of one period sort together, so a cell opens a new period
+    // when its time differs from the previous cell's
+    val newPeriod = t.isNotNull && (prev.isNull || t =!= prev)
+    // ONE aggregation to a row per (distribution, period, serie), then
+    // a straight line of windows and one aggregate per distribution: no
+    // branch of the plan reads the long form a second time
+    val rows = long
+      .groupBy(d, t, col("serie_id"))
+      .agg(count(lit(1)).as("rows"), count(col("valor")).as("n_values"))
       .join(broadcast(freqs), Seq("distribution_id"))
-      .withColumn("prev",
-        lag(t, 1).over(Window.partitionBy(d).orderBy(t)))
+      .withColumn("prev", lag(t, 1).over(Window.partitionBy(d).orderBy(t)))
+      .withColumn("serie_values",
+        sum(col("n_values")).over(Window.partitionBy(d, col("serie_id"))))
       .groupBy(d)
       .agg(
-        count(t).as("periods"),
+        count(when(newPeriod, 1)).as("periods"),
         count(when(t.isNull, 1)).as("null_times"),
-        max(col("extra")).as("extra_rows"),
-        count(when(col("freq_months").isNotNull && col("prev").isNotNull &&
-          step =!= 1.0, 1)).as("gaps"))
-    val bySerie = long
-      .groupBy(d, col("serie_id")).agg(count(col("valor")).as("n_values"))
-      .groupBy(d)
-      .agg(collect_list(struct(col("serie_id"), col("n_values")))
-        .as("values"))
-    val rows = byTime.join(bySerie, Seq("distribution_id")).collect()
+        // a serie with two rows for one period: a duplicate time (the
+        // serie-less rows of a frame with no series count as one serie)
+        count(when(col("rows") > 1, 1)).as("duplicate_times"),
+        count(when(newPeriod && col("freq_months").isNotNull &&
+          prev.isNotNull && step =!= 1.0, 1)).as("gaps"),
+        collect_set(struct(col("serie_id"), col("serie_values")))
+          .as("values"))
+      .collect()
       .map(r => r.getAs[String]("distribution_id") -> r).toMap
 
     specs.map { s =>
@@ -140,20 +146,23 @@ object TimeSeriesOps {
       val row = rows.get(id)
       val periods = row.fold(0L)(_.getAs[Long]("periods"))
       val errors =
-        if (periods == 0) Seq("empty distribution")
+        if (periods == 0) Seq(s"$id: empty distribution")
         else {
           val r = row.get
           val values = r.getAs[Seq[Row]]("values")
             .map(v => v.getString(0) -> v.getLong(1)).toMap
           Seq("null time index" -> r.getAs[Long]("null_times"),
-              "duplicate time index" -> r.getAs[Long]("extra_rows"))
-            .collect { case (e, n) if n > 0 => e } ++
+              "duplicate time index" -> r.getAs[Long]("duplicate_times"))
+            .collect { case (e, n) if n > 0 => s"$id: $e" } ++
           s.series.flatMap { serie =>
-            val miss =
-              1.0 - values.getOrElse(serie, 0L).toDouble / periods
-            if (miss > maxMissingRatio)
-              Some(f"$serie: missing ratio $miss%.3f > $maxMissingRatio")
-            else None
+            values.get(serie) match {
+              case None => Some(s"$serie: no data scraped")
+              case Some(n) =>
+                val miss = 1.0 - n.toDouble / periods
+                if (miss > MaxMissingRatio)
+                  Some(f"$serie: missing ratio $miss%.3f > $MaxMissingRatio")
+                else None
+            }
           }
         }
       val gaps = row.fold(0L)(_.getAs[Long]("gaps"))

@@ -56,7 +56,7 @@ class TimeSeriesOpsSpec extends SparkSpec {
       ("sparse", "a", "2020-03-01", Some(3.0)),
       ("sparse", "b", "2020-01-01", Some(1.0)),
       ("sparse", "b", "2020-03-01", Some(3.0)),
-      // "gap": March missing from the index, b mostly empty
+      // "gap": March missing from the index, b mostly empty, c absent
       ("gap", "a", "2020-01-01", Some(1.0)),
       ("gap", "a", "2020-02-01", Some(2.0)),
       ("gap", "a", "2020-04-01", Some(4.0)),
@@ -72,16 +72,17 @@ class TimeSeriesOpsSpec extends SparkSpec {
     val m = Some(Frequency.Monthly)
     val v = TimeSeriesOps.distributionVerdicts(long, Seq(
       DistributionSpec("sparse", Seq("a", "b"), m),
-      DistributionSpec("gap", Seq("a", "b"), m),
+      DistributionSpec("gap", Seq("a", "b", "c"), m),
       DistributionSpec("dup", Seq("a"), None),
       DistributionSpec("nullt", Seq("a"), m),
       DistributionSpec("absent", Seq("a"), m)))
     assert(v("sparse") == Verdict(3, Seq.empty, Seq.empty))
-    assert(v("gap") == Verdict(3, Seq("b: missing ratio 1.000 > 0.5"),
+    assert(v("gap") == Verdict(3,
+      Seq("b: missing ratio 1.000 > 0.5", "c: no data scraped"),
       Seq("1 frequency gap(s) vs R/P1M")))
-    assert(v("dup") == Verdict(1, Seq("duplicate time index"), Seq.empty))
-    assert(v("nullt") == Verdict(1, Seq("null time index"), Seq.empty))
-    assert(v("absent") == Verdict(0, Seq("empty distribution"), Seq.empty))
+    assert(v("dup") == Verdict(1, Seq("dup: duplicate time index"), Seq.empty))
+    assert(v("nullt") == Verdict(1, Seq("nullt: null time index"), Seq.empty))
+    assert(v("absent") == Verdict(0, Seq("absent: empty distribution"), Seq.empty))
 
     // a wide frame without series still stacks one row per period
     val bare = Seq("2020-01-01", "2020-01-01").toDF("t")
@@ -91,7 +92,7 @@ class TimeSeriesOpsSpec extends SparkSpec {
       Seq("distribution_id", "serie_id", "indice_tiempo", "valor"))
     assert(TimeSeriesOps.distributionVerdicts(stacked,
         Seq(DistributionSpec("bare", Seq.empty, m)))("bare") ==
-      Verdict(1, Seq("duplicate time index"), Seq.empty))
+      Verdict(1, Seq("bare: duplicate time index"), Seq.empty))
   }
 
   test("completeCalendar fills gaps at declared frequency") {
