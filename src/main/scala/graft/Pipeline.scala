@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.model.Frequency
 import graft.operators.{CatalogValidator, Reports, TimeSeriesOps}
 import graft.sinks.{ReportXlsx, SingleFileCsv}
@@ -22,22 +23,24 @@ import scala.util.Try
   *     each distribution's time index) plus the excel grid checks
   *     (header drift, T2 trim) — each a fixed number of jobs for the
   *     whole catalog
-  *   → ordered single-file CSV sink (K1)
+  *   → ordered single-file CSV sink (K1), every file in one job
   *   → status reports + indicators (A1-A3, O1)
   *
-  * Fault isolation (§2.10): spec assembly, each file read and each
-  * final write are wrapped in Try; a failure becomes an ERROR report
-  * row with the exception repr, never a job abort — the reference's
-  * try/except per distribution, kept as data. A batch that throws is
-  * rerun per workbook (excel) or per file (direct); a group that still
-  * throws becomes ERROR rows for its distributions.
+  * Fault isolation (§2.10): spec assembly and each file read are
+  * wrapped in Try, and each final write is captured by the sink's job;
+  * a failure becomes an ERROR report row with the exception repr, never
+  * a job abort — the reference's try/except per distribution, kept as
+  * data. A batch that throws is rerun per workbook (excel) or per file
+  * (direct); a group that still throws becomes ERROR rows for its
+  * distributions.
   *
   * Scale shape: the driver loop of the reference (one python iteration
   * per distribution, reference base.py:155-207) becomes O(1) Spark jobs
-  * for scrape + validation on both paths regardless of distribution
-  * count, plus one write job per output file — the only
-  * per-distribution cost left is the K1 exact-filename sink itself (and,
-  * on the direct path, the read of each file's header).
+  * on both paths regardless of distribution count: each path's long
+  * form is computed once and kept, the battery judges it, and ONE K1
+  * job (SingleFileCsv.writeAll) writes every output file. The only
+  * per-distribution cost left is on the direct path: the read of each
+  * file's header (schema inference) when its frame is planned.
   */
 object Pipeline {
 
@@ -282,31 +285,38 @@ object Pipeline {
       case _ => None
     }
 
-    // K1 sink of one judged distribution: errors → ERROR row and no
-    // write; otherwise the file is written and warnings make it WARNING.
-    // "Replaced" note (reference base.py:183-191): an OK distribution
-    // whose existing output was overwritten under --replace reports
-    // note=Replaced; warnings take precedence (the reference's elif).
-    def sink(m: ManifestEntry, v: TimeSeriesOps.Verdict,
-        wide: => DataFrame): DistributionResult = {
-      val outPath = outPathOf(m)
-      Try {
-        if (v.errors.nonEmpty)
+    // K1 sink of a judged batch, ONE write job for all of it
+    // (SingleFileCsv.writeAll over the batch's long form): errors →
+    // ERROR row and no write; otherwise the file is written and
+    // warnings make it WARNING, and a write that fails is that
+    // distribution's ERROR row. "Replaced" note (reference
+    // base.py:183-191): an OK distribution whose existing output was
+    // overwritten under --replace reports note=Replaced; warnings take
+    // precedence (the reference's elif).
+    def sink(long: DataFrame, judged: Seq[(ManifestEntry,
+        TimeSeriesOps.Verdict, Seq[String])]): Seq[DistributionResult] = {
+      val targets = judged.collect { case (m, v, columns)
+          if v.errors.isEmpty =>
+        SingleFileCsv.Target(m.distributionId, outPathOf(m), columns) }
+      val existed = targets.filter(t => java.nio.file.Files
+          .exists(java.nio.file.Paths.get(t.path)))
+        .map(_.distributionId).toSet
+      val written = SingleFileCsv.writeAll(long, targets)
+      judged.map { case (m, v, _) =>
+        def result(status: String, message: String, rows: Long) =
           DistributionResult(m.catalogId, m.datasetId, m.distributionId,
-            "ERROR", v.errors.mkString("; ").take(500), outPath, 0L)
-        else {
-          val existed = java.nio.file.Files
-            .exists(java.nio.file.Paths.get(outPath))
-          SingleFileCsv.write(wide, outPath, sortBy = Seq("indice_tiempo"))
-          val note =
-            if (v.warnings.nonEmpty) v.warnings.mkString("; ").take(500)
-            else if (existed && replace) "Replaced"
-            else ""
-          DistributionResult(m.catalogId, m.datasetId, m.distributionId,
-            if (v.warnings.nonEmpty) "WARNING" else "OK", note, outPath,
-            v.periods)
+            status, message.take(500), outPathOf(m), rows)
+        if (v.errors.nonEmpty) result("ERROR", v.errors.mkString("; "), 0L)
+        else written(m.distributionId) match {
+          case Left(error) => result("ERROR", error, 0L)
+          case Right(rows) =>
+            val note =
+              if (v.warnings.nonEmpty) v.warnings.mkString("; ")
+              else if (existed(m.distributionId) && replace) "Replaced"
+              else ""
+            result(if (v.warnings.nonEmpty) "WARNING" else "OK", note, rows)
         }
-      }.recover { case e => errorRow(m, e) }.get
+      }
     }
 
     // The one failure rule (§2.10, the reference's per-distribution
@@ -328,8 +338,8 @@ object Pipeline {
     }
 
     // ---- the excel batch core: ONE combined grid, ONE scrape, ONE
-    // validation battery, one job per grid check — none of it scales
-    // with distribution count; the per-distribution cost is the write
+    // validation battery, one job per grid check, ONE K1 write job —
+    // none of it scales with distribution count
     def processExcel(ps: Seq[ExcelPrep]): Seq[DistributionResult] = {
       // globally-unique sheet key: url NUL sheet (NUL can't occur in
       // either part)
@@ -343,25 +353,11 @@ object Pipeline {
         CellGrid.BatchSeriesSpec(p.m.distributionId, sp.serieId,
           sheetKey(p.url, p.sheet), sp.dataStartCell,
           p.timeDataStartCell, p.freq.code)))
-      // the batch long form is staged ONCE as parquet partitioned by
-      // distribution: the validation jobs below scan it columnar, and
-      // each per-distribution write reads ONLY its pruned partition —
-      // an in-memory checkpoint would make every write re-scan the
-      // whole catalog's blocks (O(N × catalog) at 20k distributions).
-      val stagePath = s"$outputDir/.graft-batch-long"
-      val stage = new org.apache.hadoop.fs.Path(stagePath)
+      // the batch long form is computed ONCE, by the first validation
+      // job, and kept for the rest of the battery and the K1 sink
+      val batchLong = CellGrid.scrapeAll(combined, specs)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        CellGrid.scrapeAll(combined, specs)
-          .write.mode("overwrite").partitionBy("distribution_id")
-          .parquet(stagePath)
-        // partition values are distribution IDs like "1.1" — keep them
-        // strings (type inference would read them back as doubles)
-        val infKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        val infWas = spark.conf.get(infKey, "true")
-        val batchLong =
-          try { spark.conf.set(infKey, "false"); spark.read.parquet(stagePath) }
-          finally spark.conf.set(infKey, infWas)
-
         val verdicts = TimeSeriesOps.distributionVerdicts(batchLong,
           ps.map(p => TimeSeriesOps.DistributionSpec(p.m.distributionId,
             p.series.map(_.serieId), Some(p.freq))))
@@ -390,24 +386,17 @@ object Pipeline {
               (if (r.isNullAt(1)) None else Some(r.getInt(1))),
               (if (r.isNullAt(2)) None else Some(r.getInt(2))))).toMap
 
-        ps.map { p =>
+        sink(batchLong, ps.map { p =>
           val d = p.m.distributionId
           val v = verdicts(d)
           val trim = bounds.get(d).flatMap { case (de, te) =>
             trimMessage(de, te, p.timeDataStartCell) }
           val drift = drifts.get(d).map(ds =>
             s"header drift: ${ds.mkString(", ")}")
-          sink(p.m, v.copy(warnings = trim.toSeq ++ v.warnings ++ drift),
-            TimeSeriesOps.alignWide(
-              batchLong.filter(col("distribution_id") === d)
-                .select(col("serie_id"), col("indice_tiempo"), col("valor")),
-              p.series.map(_.serieId), ordered = false))
-        }
-      } finally {
-        // no attempt, failed or not, leaves the tree in the output dir
-        stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(stage, true)
-      }
+          (p.m, v.copy(warnings = trim.toSeq ++ v.warnings ++ drift),
+            "indice_tiempo" +: p.series.map(_.serieId))
+        })
+      } finally batchLong.unpersist()
     }
     val excelResults = isolated(okPreps)(_.m, _.url)(processExcel)
 
@@ -439,15 +428,20 @@ object Pipeline {
         case (a, b) => unionAll(a).unionByName(unionAll(b))
       }
     def processDirect(ds: Seq[DirectPrep]): Seq[DistributionResult] = {
-      val stacked = unionAll(ds.map(d =>
-        TimeSeriesOps.stackWide(d.wide, d.m.distributionId)))
       // one task per core, not per file: every task deserialises the
-      // whole union's plan, so a task per file is quadratic too
-      val verdicts = TimeSeriesOps.distributionVerdicts(
-        stacked.coalesce(spark.sparkContext.defaultParallelism),
-        ds.map(d => TimeSeriesOps.DistributionSpec(d.m.distributionId,
-          d.wide.columns.filter(_ != "indice_tiempo").toSeq, d.freq)))
-      ds.map(d => sink(d.m, verdicts(d.m.distributionId), d.wide))
+      // whole union's plan, so a task per file is quadratic too; kept
+      // for the battery and the K1 sink, so each file is read once
+      val stacked = unionAll(ds.map(d =>
+          TimeSeriesOps.stackWide(d.wide, d.m.distributionId)))
+        .coalesce(spark.sparkContext.defaultParallelism)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val verdicts = TimeSeriesOps.distributionVerdicts(stacked,
+          ds.map(d => TimeSeriesOps.DistributionSpec(d.m.distributionId,
+            d.wide.columns.filter(_ != "indice_tiempo").toSeq, d.freq)))
+        sink(stacked, ds.map(d => (d.m, verdicts(d.m.distributionId),
+          d.wide.columns.toSeq)))
+      } finally stacked.unpersist()
     }
     val directResults = directPreps.collect { case Left(r) => r } ++
       isolated(directPreps.collect { case Right(d) => d })(

@@ -199,10 +199,16 @@ object Ingest {
 
   /** Pick the candidate delimiter that splits the header line into the
     * most cells — pandas-style sniffing for the reference's mixed
-    * TXT sources. */
+    * TXT sources. The header line is read on the driver (UTF-8, line
+    * terminator stripped); it needs no Spark job. */
   private def sniffDelimiter(spark: SparkSession, path: String): String = {
-    val header = scala.util.Try(
-      spark.read.textFile(path).first()).getOrElse("")
+    val header = scala.util.Try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+      try new java.io.BufferedReader(new java.io.InputStreamReader(in,
+          java.nio.charset.StandardCharsets.UTF_8)).readLine()
+      finally in.close()
+    }.toOption.flatMap(Option(_)).getOrElse("")
     Seq(",", ";", "\t", "|")
       .maxBy(d => header.split(java.util.regex.Pattern.quote(d), -1).length)
   }

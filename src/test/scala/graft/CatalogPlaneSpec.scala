@@ -206,6 +206,32 @@ class CatalogPlaneSpec extends SparkSpec {
       r2(0).getDouble(1) == 7.5)
   }
 
+  test("TXT delimiter sniffing reads the header on the driver (S6)") {
+    // CRLF line ends: the sniffed header line carries no '\r'
+    val txt = workDir.resolve("crlf.txt")
+    Files.writeString(txt, "fecha|pib|pbi\r\n2021-01-01|7.5|1\r\n")
+    def readJobs(delimiter: String): (Int, Seq[String]) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val df = Ingest.readDistributionTxt(spark, txt.toString, delimiter,
+          timeFieldTitle = "fecha")
+        Thread.sleep(500) // let the async listener bus drain
+        (jobs.get(), df.columns.toSeq)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (sniffed, columns) = readJobs("")
+    assert(columns == Seq("indice_tiempo", "pib", "pbi"))
+    // the sniff itself adds no job to the reader's own
+    assert(sniffed == readJobs("|")._1)
+  }
+
   test("validation is schema-file-driven: editing a schema changes enforcement") {
     import graft.operators.SchemaRules
     // parse unit: required + anyOf patterns + formats + $ref temporal

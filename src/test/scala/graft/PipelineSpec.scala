@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.sources.CatalogReader
+import scala.jdk.CollectionConverters._
 
 /** End-to-end: fixture catalog JSON → manifest → processors → validation
   * → single-file CSV sinks → report + indicators (SURVEY §3). */
@@ -126,63 +127,103 @@ class PipelineSpec extends SparkSpec {
     assert(comp.tail.forall(_.last == "valid"))
   }
 
-  test("batch scrape: spark-job count stays O(1) + one write per item") {
-    // N distributions over one shared workbook — the scrape/validation
-    // job count must NOT scale with N (only the K1 writes do).
-    val n = 6
-    val grid = (1 to n).flatMap { d =>
-      Seq((s"hoja$d", 1, 1, "indice_tiempo"), (s"hoja$d", 1, 2, s"s$d")) ++
-        (2 to 13).flatMap(r => Seq(
-          (s"hoja$d", r, 1, f"2021-${r - 1}%02d"),
-          (s"hoja$d", r, 2, s"$r.5")))
-    }.toDF("sheet", "row", "col", "value")
-    val manifest = (1 to n).map(d => Pipeline.ManifestEntry(
-      "jobcat", "1", s"1.$d", Some("excel_file"), None,
-      Some("mem://wb"), Some(s"hoja$d"), None))
-    val fields = (1 to n).flatMap(d => Seq(
-      Pipeline.FieldEntry(s"1.$d", Some("indice_tiempo"),
-        Some("time_index"), Some("R/P1M"), Some("A1"), Some("A2")),
-      Pipeline.FieldEntry(s"1.$d", Some(s"s$d"), None, None,
-        Some("B1"), Some("B2"))))
-
+  /** Spark jobs started while `body` runs, with AQE off: AQE
+    * materializes every shuffle stage as its own "job", which inflates
+    * the count and hides the scaling signal; one action = one job
+    * without it. `counts` picks the jobs by their first `graft.` frame. */
+  private def jobsDuring(counts: String => Boolean = _ => true)(
+      body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        sites.add(js.stageInfos.map(_.name).mkString("|").take(120))
+        val frame = js.stageInfos.flatMap(_.details.split('\n'))
+          .map(_.trim).find(_.startsWith("graft.")).getOrElse("")
+        if (counts(frame)) jobs.incrementAndGet()
         ()
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    val out = workDir.resolve("jobcount").toString
-    // AQE materializes every shuffle stage as its own "job", which
-    // inflates the count ~4x and hides the scaling signal; one action =
-    // one job without it.
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val result = Pipeline.process(spark, manifest, fields, out,
-        Map("mem://wb" -> grid), None, replace = true)
-      val statuses = result.report.collect()
-        .map(_.getAs[String]("distribution_status")).toSeq
-      assert(statuses.count(_ == "OK") == n, statuses)
+      body
       Thread.sleep(1000) // let the async listener bus drain
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
       spark.sparkContext.removeSparkListener(listener)
     }
-    // constant part ≈ 14 (staging write + listing, 5 validation
-    // collects incl. the T2 bounds job, broadcast builds, report
-    // collects); per distribution: exactly ONE write job over its
-    // pruned staging partition. The old per-item loop cost ≥ 3 full
-    // lineage jobs per distribution (≥ 18 + report jobs for n=6), so
-    // n + 15 cleanly separates the batch design from any per-item
-    // regression.
-    assert(jobs.get() <= n + 15,
-      s"job count ${jobs.get()} suggests per-distribution scrape jobs:\n" +
-        sites.toArray.mkString("\n"))
+    jobs.get()
+  }
+
+  test("batch scrape: spark-job count stays O(1), K1 writes included") {
+    // n distributions over one shared workbook — the whole pipeline's
+    // job count (scrape, validation, the K1 sink, reports) must NOT
+    // scale with n: 3 and 6 distributions cost the same jobs
+    def pipelineJobs(n: Int): Int = {
+      val grid = (1 to n).flatMap { d =>
+        Seq((s"hoja$d", 1, 1, "indice_tiempo"), (s"hoja$d", 1, 2, s"s$d")) ++
+          (2 to 13).flatMap(r => Seq(
+            (s"hoja$d", r, 1, f"2021-${r - 1}%02d"),
+            (s"hoja$d", r, 2, s"$r.5")))
+      }.toDF("sheet", "row", "col", "value")
+      val manifest = (1 to n).map(d => Pipeline.ManifestEntry(
+        "jobcat", "1", s"1.$d", Some("excel_file"), None,
+        Some("mem://wb"), Some(s"hoja$d"), None))
+      val fields = (1 to n).flatMap(d => Seq(
+        Pipeline.FieldEntry(s"1.$d", Some("indice_tiempo"),
+          Some("time_index"), Some("R/P1M"), Some("A1"), Some("A2")),
+        Pipeline.FieldEntry(s"1.$d", Some(s"s$d"), None, None,
+          Some("B1"), Some("B2"))))
+      val out = workDir.resolve(s"jobcount$n").toString
+      jobsDuring() {
+        val result = Pipeline.process(spark, manifest, fields, out,
+          Map("mem://wb" -> grid), None, replace = true)
+        val statuses = result.report.collect()
+          .map(_.getAs[String]("distribution_status")).toSeq
+        assert(statuses.count(_ == "OK") == n, statuses)
+      }
+    }
+    val (small, large) = (pipelineJobs(3), pipelineJobs(6))
+    assert(large == small,
+      s"pipeline jobs grew with n: $small for 3, $large for 6")
+  }
+
+  test("a failing K1 write is one ERROR row; the other files land") {
+    val dir = Files.createTempDirectory(workDir, "writefail")
+    val manifest = (1 to 3).map { d =>
+      val csv = dir.resolve(s"src$d.csv")
+      Files.writeString(csv, "indice_tiempo,v\n" + (1 to 6)
+        .map(m => f"2021-$m%02d-01,$d.$m").mkString("\n") + "\n")
+      Pipeline.ManifestEntry("wfcat", "1", s"1.$d", Some("csv_file"),
+        Some(csv.toString), None, None, None)
+    }
+    val fields = (1 to 3).map(d => Pipeline.FieldEntry(s"1.$d",
+      Some("indice_tiempo"), Some("time_index"), Some("R/P1M"), None, None))
+    val out = dir.resolve("out")
+    def downloadDir(d: Int) =
+      out.resolve(s"catalog/wfcat/dataset/1/distribution/1.$d/download")
+    // 1.2's download directory is a regular file: its write cannot start
+    Files.createDirectories(downloadDir(2).getParent)
+    Files.writeString(downloadDir(2), "not a directory")
+    val rows = Pipeline.process(spark, manifest, fields, out.toString,
+        Map.empty, None, replace = true)
+      .report.collect().toSeq
+      .map(r => (r.getAs[String]("distributionId"),
+        r.getAs[String]("distribution_status"), r.getAs[String]("message")))
+    val failed = rows.filter(_._1 == "1.2")
+    assert(failed.size == 1 && failed.head._2 == "ERROR", rows)
+    assert(failed.head._3.contains("FileAlreadyExistsException") &&
+      failed.head._3.contains(downloadDir(2).toString), rows)
+    assert(rows.filter(_._1 != "1.2").map(r => (r._1, r._2)).sorted ==
+      Seq(("1.1", "OK"), ("1.3", "OK")), rows)
+    // the written files stand alone: no temp file beside any target
+    Seq(1, 3).foreach { d =>
+      val names = Files.list(downloadDir(d)).iterator().asScala
+        .map(_.getFileName.toString).toSet
+      assert(names == Set(s"1.$d.csv"), names)
+      assert(Files.readAllLines(downloadDir(d).resolve(s"1.$d.csv")).size == 7)
+    }
   }
 
   test("T2 trim warning reaches the report (batch path) + Replaced note") {
@@ -329,9 +370,9 @@ class PipelineSpec extends SparkSpec {
 
   test("direct CSV path: validation job count stays O(1)") {
     // n and then 2n direct CSV distributions: each costs its own header
-    // read and K1 write, but the validation battery must stay a fixed
-    // number of jobs for the whole catalog
-    def validationJobs(n: Int): Int = {
+    // read, but the validation battery and the K1 sink must stay a
+    // fixed number of jobs for the whole catalog
+    def pipelineJobs(n: Int): Int = {
       val dir = Files.createTempDirectory(workDir, s"direct$n")
       val manifest = (1 to n).map { d =>
         val csv = dir.resolve(s"src$d.csv")
@@ -343,35 +384,16 @@ class PipelineSpec extends SparkSpec {
       val fields = (1 to n).map(d => Pipeline.FieldEntry(s"1.$d",
         Some("indice_tiempo"), Some("time_index"), Some("R/P1M"), None,
         None))
-      // jobs started outside the reads (Ingest) and the K1 sink
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val frame = js.stageInfos.flatMap(_.details.split('\n'))
-            .map(_.trim).find(_.startsWith("graft.")).getOrElse("")
-          if (!frame.startsWith("graft.sources.Ingest") &&
-            !frame.startsWith("graft.sinks.")) jobs.incrementAndGet()
-          ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      // jobs started outside the reads (Ingest)
+      jobsDuring(!_.startsWith("graft.sources.Ingest")) {
         val statuses = Pipeline.process(spark, manifest, fields,
             dir.resolve("out").toString, Map.empty, None, replace = true)
           .report.collect().map(_.getAs[String]("distribution_status"))
         assert(statuses.toSeq == Seq.fill(n)("OK"), statuses.toSeq)
-        Thread.sleep(1000) // let the async listener bus drain
-      } finally {
-        spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        spark.sparkContext.removeSparkListener(listener)
       }
-      jobs.get()
     }
-    val (small, large) = (validationJobs(3), validationJobs(6))
+    val (small, large) = (pipelineJobs(3), pipelineJobs(6))
     assert(large <= small,
-      s"validation jobs grew with n: $small for 3, $large for 6")
+      s"validation and K1 jobs grew with n: $small for 3, $large for 6")
   }
 }
