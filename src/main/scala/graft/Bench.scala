@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query against
   * SPARK_GRAFT_SF_DIR. Emits TWO artifacts:
   *  - `BENCH_full.json` (SPARK_GRAFT_BENCH_OUT): the complete record —
@@ -39,75 +37,21 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the testdata parquet stores timestamps WITHOUT isAdjustedToUTC
-      // (pyarrow naive timestamp[us]); Spark 4's default NTZ inference
-      // would type them TIMESTAMP_NTZ and break unix_micros/window
-      // arithmetic — read them as session-UTC instants instead
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // The sf0.1 inputs are SINGLE parquet files (lineitem ≈ 11 MB); at
-      // the default 128 MB maxPartitionBytes every scan is one task and
-      // the star joins run effectively single-threaded. 4 MB splits give
-      // the local[32] bench real scan parallelism; production data is
-      // many-file and unaffected.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // all suite queries' generated classes fit: passes 2-3 run
-      // warm-codegen without per-pass recompilation (static conf)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // resetStorage()'s blocking unpersist of locally-checkpointed RDDs
-    // emits one "lineage has been truncated" WARN per checkpointed RDD —
-    // hundreds per run, and they land on stderr AFTER the headline JSON
-    // in a combined-stream tail capture (the r13/r14 driver artifacts'
-    // 2000-char tails were 100% this spam and parsed to nothing). The
-    // unpersist is intentional (storage must reset between timed runs),
-    // so silence the whole rdd package to ERROR for the bench JVM.
+    val spark = GraftSession.start(GraftSession.suite)
+    // GraftSession.resetStorage's blocking unpersist of locally-
+    // checkpointed RDDs emits one "lineage has been truncated" WARN per
+    // checkpointed RDD — hundreds per run, and they land on stderr AFTER
+    // the headline JSON in a combined-stream tail capture (the r13/r14
+    // driver artifacts' 2000-char tails were 100% this spam and parsed
+    // to nothing). The unpersist is intentional (storage must reset
+    // between timed runs), so silence the whole rdd package to ERROR for
+    // the bench JVM.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
 
-    // Optional subset filter for local profiling: comma-separated names.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = GraftSession.querySubset
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-
-    // Drop everything a finished query run left in the storage layer.
-    // clearCache() empties the CacheManager but NOT localCheckpoint
-    // blocks: those are persistent RDDs released only when the GC
-    // collects the frame AND the async ContextCleaner gets around to it.
-    // Across 50+ queries the lag let checkpoint blocks from earlier
-    // queries pile up in the block manager and push later checkpoint
-    // writes into eviction/disk (q32 measured 10.4s in-suite vs 2.3s
-    // isolated, round 3). Unpersisting every registered persistent RDD
-    // synchronously (blocking=true) resets storage between queries.
-    def resetStorage(): Unit = {
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      // Give the ContextCleaner a beat to DRAIN the reference queue the
-      // gc just populated (broadcasts, shuffle files, accumulators from
-      // the finished query). Cleanup RPCs and shuffle-file deletes are
-      // async; without the pause they land INSIDE the next timed run —
-      // measured at sf0.1 as up to 2-5× inflation on shuffle-heavy
-      // queries late in the suite (q182 2.0s isolated vs 4.5s in a
-      // 30-query suite, 11.6s in the full 232-query suite), and the
-      // debt grows with suite size. 200 ms × 232 queries × 4 runs adds
-      // ~3 min of untimed wall per bench — cheap insurance for a
-      // trustworthy per-query number.
-      Thread.sleep(sys.env.getOrElse("SPARK_GRAFT_RESET_SLEEP_MS", "200")
-        .toLong)
-    }
 
     // Host-calibration probe (r8 verdict: the 46s→71s cross-round bench
     // shift was environmental — r7 code reproduced r8 timings — and
@@ -202,7 +146,7 @@ object Bench {
         if (pass == 1) {
           // warm THIS query untimed right before its first timed run
           try fn(spark, sfDir).count() catch { case _: Throwable => () }
-          resetStorage()
+          GraftSession.resetStorage(spark)
         }
         val t0 = System.nanoTime()
         // a query that throws is recorded as an error marker, never as a
@@ -216,7 +160,7 @@ object Bench {
         } catch {
           case e: Throwable => errs0(name) = e.toString.take(200)
         }
-        resetStorage()
+        GraftSession.resetStorage(spark)
       }
     }
     memProbes += probeMemGbps()

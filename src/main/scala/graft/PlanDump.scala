@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-capture diagnostic: writes `.explain("formatted")` for selected
@@ -9,7 +8,7 @@ import java.nio.file.{Files, Paths}
   * and checks plan claims against these files).
   *
   * Usage: PlanDump <sfDir> <outDir> <tag> [q1,q2,...]
-  * (no query list = all queries). Same session config as Bench so the
+  * (no query list = all queries). Same session as Bench so the
   * captured plan is the one the bench executes.
   */
 object PlanDump {
@@ -18,22 +17,8 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val tag = args(2)
-    val only = args.lift(3)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = args.lift(3).map(GraftSession.names(_).toSet)
+    val spark = GraftSession.start(GraftSession.suite)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query profiling diagnostic for the optimization rounds: runs
   * selected queries (warm once, then timed) under a listener that
@@ -17,28 +16,22 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ProfileQuery <sfDir> <names> [reps]")
     val sfDir = args(0)
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
+    val names = GraftSession.names(args(1))
     val reps = args.lift(2).map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    def confPairs(env: String): Seq[(String, String)] =
+      sys.env.getOrElse(env, "").split(";").toSeq.map(_.trim)
+        .filter(_.contains("="))
+        .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
     // quick A/B knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overrides session conf
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(";").map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val spark0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(spark0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.suite,
+      confPairs("SPARK_GRAFT_EXTRA_CONF"))
+    // true A/B interleaving: SPARK_GRAFT_AB_CONF="k=v;k=v" applies on
+    // EVEN reps only, inside one JVM, so host drift hits both arms
+    // equally; withConf restores the CAPTURED baseline afterwards, not
+    // unset — unset falls back to the SQLConf default, which silently
+    // diverges from a baseline set by the session or
+    // SPARK_GRAFT_EXTRA_CONF when keys overlap
+    val ab = confPairs("SPARK_GRAFT_AB_CONF")
 
     final case class StageRec(id: Int, name: String, tasks: Int,
       wallMs: Long, execRunMs: Long, gcMs: Long, fetchWaitMs: Long,
@@ -70,42 +63,18 @@ object ProfileQuery {
     }
 
     val qmap = SparkEntry.queries
-    // first-seen baseline value per A/B key (None = was unset)
-    val abPrior =
-      scala.collection.mutable.HashMap.empty[String, Option[String]]
     for (name <- names) {
       val fn = qmap.getOrElse(name,
         sys.error(s"unknown query $name"))
       // warm: JIT + codegen + parquet footers, like the bench pass 1
       fn(spark, sfDir).count()
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc(); Thread.sleep(200)
+      GraftSession.resetStorage(spark)
       for (rep <- 1 to reps) {
-        // true A/B interleaving: SPARK_GRAFT_AB_CONF="k=v;k=v" applies
-        // on EVEN reps and reverts on odd, inside one JVM, so host
-        // drift hits both arms equally
-        sys.env.get("SPARK_GRAFT_AB_CONF").foreach { ab =>
-          ab.split(";").map(_.trim).filter(_.contains("=")).foreach { kv =>
-            val i = kv.indexOf('=')
-            val k = kv.take(i)
-            // restore the CAPTURED baseline on odd reps, not unset —
-            // unset falls back to the SQLConf default, which silently
-            // diverges from a baseline set via the session builder or
-            // SPARK_GRAFT_EXTRA_CONF when keys overlap
-            val prior = abPrior.getOrElseUpdate(k, spark.conf.getOption(k))
-            if (rep % 2 == 0) spark.conf.set(k, kv.drop(i + 1))
-            else prior match {
-              case Some(v) => spark.conf.set(k, v)
-              case None => spark.conf.unset(k)
-            }
-          }
-        }
         stages.clear(); jobs.clear(); jobStart.clear()
         spark.sparkContext.addSparkListener(listener)
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        val arm = if (rep % 2 == 0) ab else Nil
+        operators.Rounds.withConf(spark, arm: _*)(fn(spark, sfDir).count())
         val wall = (System.nanoTime() - t0) / 1e6
         // drain the listener bus so late stage events are counted
         Thread.sleep(300)
@@ -127,10 +96,7 @@ object ProfileQuery {
           println(f"   stage ${s.id}%4d wall=${s.wallMs}%5dms " +
             f"tasks=${s.tasks}%3d exec=${s.execRunMs}%5dms gc=${s.gcMs}%4dms" +
             f" fetch=${s.fetchWaitMs}%4dms ${s.name.take(90)}")
-        spark.sqlContext.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc(); Thread.sleep(200)
+        GraftSession.resetStorage(spark)
       }
     }
     spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-audit diagnostic: candidate-pair counts for the two
   * pair-search operators whose cost is candidate-grain, measured
   * THROUGH the production code paths (Dedup.prefixFilterParts /
@@ -34,18 +32,7 @@ object ScaleDiag {
     require(args.nonEmpty, "usage: ScaleDiag <sfDir> [--skip-retired]")
     val sfDir = args(0)
     val skipRetired = args.contains("--skip-retired")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.suite)
     // --pca-dims: constant-factor probe for the q175 covariance stage
     // at PRODUCTION embedding dims. The ×10/×100 audits scale rows,
     // never dims, so a per-row d²/2 constant is invisible to them (the
